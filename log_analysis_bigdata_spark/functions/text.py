@@ -117,18 +117,18 @@ def shingle_hashes(shingle_col: Column) -> Column:
     )
 
 
+def minhash_mix(h: Column, seed: int) -> Column:
+    """The seed-th universal-hash mix of one 60-bit base hash. The base
+    reduces mod P first so the a·h product stays below 2^62 — exact
+    int64 in both engines."""
+    a, b = minhash_mix_consts(seed)
+    return (F.lit(a) * (h % MINHASH_P) + F.lit(b)) % MINHASH_P
+
+
 def minhash_component(hash_col: Column, seed: int) -> Column:
     """One MinHash signature component over a pre-hashed shingle array
-    (from :func:`shingle_hashes`): min of the seed-th cheap mix. The
-    60-bit base reduces mod P first so the a·h product stays below
-    2^62 — exact int64 in both engines."""
-    a, b = minhash_mix_consts(seed)
-    return F.array_min(
-        F.transform(
-            hash_col,
-            lambda h: (F.lit(a) * (h % MINHASH_P) + F.lit(b)) % MINHASH_P,
-        )
-    )
+    (from :func:`shingle_hashes`): min of the seed-th mix."""
+    return F.array_min(F.transform(hash_col, lambda h: minhash_mix(h, seed)))
 
 
 def lang_id_heuristic(text: Column) -> Column:

@@ -19,9 +19,19 @@ a doc_id-bucketed corpus table in tests/test_plans.py:
      joins the (tiny) candidate list back to the shingle-set table by
      doc_id: with the corpus bucketed by doc_id that side reads
      pre-partitioned (no Exchange) and only candidates move;
-  4. clustering — edge-sized min-label propagation with pointer
-     jumping (operators/components.py), O(log diameter) rounds;
+  4. clustering — on the exact-class quotient
+     (operators/components.exact_class_components): one exchange on a
+     16-byte class key picks a representative per shingle-SET class,
+     only representatives enter stages 1-3, and labels expand back to
+     the members; edge-sized min-label propagation, O(log diameter)
+     rounds;
   5. keeper summary — component-label agg, output-sized.
+
+The class key is array_sort(array_distinct(hs)): every stage above is
+set-based (minhash_component is an array_min, verify_jaccard
+array_distincts), so set-equal docs — including reordered or repeated
+boilerplate whose shingle multiset differs — have identical band
+digests and Jaccard exactly 1, which is what the quotient requires.
 
 Docs with zero shingles (< 3 tokens) are dropped before banding: their
 MinHash components are all-NULL, which would both (a) diverge across
@@ -42,7 +52,7 @@ from ..functions.text import (
     shingles,
     tokens,
 )
-from .components import connected_components
+from .components import exact_class_components
 
 N_MINHASH = 8  # 2 bands x 4 rows
 # verify threshold: jaccard >= JACCARD_NUM / JACCARD_DEN, compared as
@@ -108,12 +118,10 @@ def candidate_pairs(bands: DataFrame) -> DataFrame:
     DEGENERATE-BUCKET CAVEAT (r16): this join is quadratic IN A
     BUCKET, and m byte-identical docs share every band digest — a
     2 500-member exact class measured 1 250× candidate inflation.
-    Callers whose OUTPUT is cluster-level must collapse exact classes
-    first and feed representatives only (see minhash_dedup_pipeline's
-    star construction); callers that genuinely list pairs
-    (minhash_dup_pairs) have inherently quadratic output on such
-    input, which no plan can avoid — the probe's dup-class tile pins
-    the pipeline path."""
+    Callers whose OUTPUT is cluster-level feed representatives only
+    (minhash_components); callers that genuinely list pairs
+    (queries/textq.minhash_dup_pairs) have inherently quadratic output
+    on such input, which no plan can avoid."""
     long = band_long(bands)
     a = long.select(F.col("doc_id").alias("doc_a"), "bi", "d")
     b = long.select(F.col("doc_id").alias("doc_b"), "bi", "d")
@@ -146,40 +154,24 @@ def verify_jaccard(cand: DataFrame, sh: DataFrame) -> DataFrame:
     ).select("doc_a", "doc_b")
 
 
+def minhash_components(sh: DataFrame) -> DataFrame:
+    """(node, component) near-dup clusters over ``shingle_sets`` output:
+    banded candidates → exact-Jaccard verify → connected components,
+    run on the shingle-set exact-class quotient (module docstring)."""
+    return exact_class_components(
+        sh,
+        F.array_sort(F.array_distinct("hs")),
+        lambda reps, _: verify_jaccard(
+            candidate_pairs(band_digests(reps)), reps
+        ),
+    )
+
+
 def minhash_dedup_pipeline(corpus: DataFrame) -> DataFrame:
     """corpus(doc_id, text) -> (keep_doc_id, n_members, max_doc_id):
     one row per near-dup cluster; keep_doc_id = the component's min
     doc_id (the canonical document a dedup pass retains), n_members
-    counts how many documents collapse into it.
-
-    EXACT-CLASS COLLAPSE (r16 — the dup-class skew probe's find; key
-    reworked r17): the LSH self-join is quadratic in a BUCKET, and m
-    byte-identical docs share every band digest — a single
-    2 500-member exact class turned 2.5k natural candidates into 3.13M
-    (measured at sf1; a realistic 100 TB boilerplate class of 10⁶ docs
-    would be 5·10¹¹ pairs — job death). So docs are first grouped into
-    SHINGLE-SET-equality classes: every downstream stage is set-based
-    (minhash_component is an array_min — order/multiplicity
-    insensitive; band digests derive from it; verify_jaccard
-    array_distincts), so set-equal docs are guaranteed identical band
-    digests and Jaccard exactly 1 — a verified clique — which an
-    (m−1)-edge star to the class's min doc id reproduces with
-    identical connectivity. (r16 keyed on the raw ``hs`` array, which
-    missed reordered/repeated boilerplate whose shingle MULTISET
-    differs but whose set is equal — ADVICE r16 — and shipped the
-    whole array through two exchanges as the shuffle key.) The class
-    key is now a fixed-width xxhash64 PAIR over
-    array_sort(array_distinct(hs)) — 16 bytes on the wire instead of
-    the KB-scale array; a cross-class double collision needs both
-    64-bit hashes to agree (~2^-128 per class pair), the same accepted
-    collision class as verify_jaccard's 60-bit base hashes. Only one
-    representative per class enters banding/verify, so collisions in a
-    bucket are once again genuine near-dup candidates, not copies.
-    Output is unchanged by construction: star ∪ rep-level verified
-    edges spans exactly the node set and components the clique ∪
-    member-level edges did (any member's near-dup edge is its rep's
-    edge — same shingle set).
-    """
+    counts how many documents collapse into it."""
     # spread the shingle+digest stage across all cores first: a small
     # corpus parquet arrives as 1-2 input splits, which would serialize
     # the ONE expensive narrow pass of the pipeline onto 1-2 tasks (at
@@ -188,50 +180,13 @@ def minhash_dedup_pipeline(corpus: DataFrame) -> DataFrame:
     corpus = corpus.repartition(
         corpus.sparkSession.sparkContext.defaultParallelism
     )
-    sd = F.array_sort(F.array_distinct("hs"))
-    sh_all = (
-        shingle_sets(corpus)
-        .withColumn("ck1", F.xxhash64(sd))
-        .withColumn("ck2", F.xxhash64(sd, F.lit(-7046029254386353131)))
-        .persist()
-    )  # hashed shingles + 16-byte set-class key, all docs
-    # (the persist is ALSO the materialization boundary that keeps the
-    # md5 base hash single-pass — see functions.text docstring)
-    # set-equality classes: one groupBy on the digest pair (map-side
-    # combinable after the repartition spreads the digest pass; only
-    # (ck1, ck2, doc_id) ride this exchange — the arrays stay put);
-    # reps carry their class forward, members contribute one star edge
-    classes = sh_all.select("ck1", "ck2", "doc_id").groupBy(
-        "ck1", "ck2"
-    ).agg(
-        F.min("doc_id").alias("rep"),
-        F.count(F.lit(1)).alias("class_n"),
-    )
-    with_rep = sh_all.join(classes, ["ck1", "ck2"]).persist()
-    star = with_rep.filter(F.col("doc_id") != F.col("rep")).select(
-        F.col("rep").alias("doc_a"), F.col("doc_id").alias("doc_b")
-    )
-    sh = with_rep.filter(F.col("doc_id") == F.col("rep")).select(
-        "doc_id", "hs"
-    )
-    ver = verify_jaccard(candidate_pairs(band_digests(sh)), sh)
-    comp = connected_components(
-        ver.unionByName(star), src="doc_a", dst="doc_b",
-        distinct_pairs=True,
-    )
-    # comp is localCheckpoint-materialized inside connected_components,
-    # so the returned frame no longer reads the shingle caches — release
-    # them now instead of leaking cached copies per invocation into the
-    # session-lifetime cache manager (bench runs each entry 3x)
-    sh_all.unpersist(blocking=False)
-    with_rep.unpersist(blocking=False)
-    out = comp.groupBy("component").agg(
+    comp = minhash_components(shingle_sets(corpus))
+    return comp.groupBy("component").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.max("node").alias("max_doc_id"),
     ).select(
         F.col("component").alias("keep_doc_id"), "n_members", "max_doc_id"
     )
-    return out
 
 
 def incremental_verified_matches(

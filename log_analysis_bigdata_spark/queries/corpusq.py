@@ -1441,23 +1441,12 @@ def dedup_survivors_by_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark.sql.window import Window
 
-    from ..operators.components import connected_components
-    from ..operators.dedup import (
-        band_digests,
-        candidate_pairs,
-        shingle_sets,
-        verify_jaccard,
-    )
+    from ..operators.dedup import minhash_components, shingle_sets
 
     corpus = _surv_corpus_spark(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism
     )
-    sh = shingle_sets(corpus).persist()
-    ver = verify_jaccard(candidate_pairs(band_digests(sh)), sh)
-    labels = connected_components(
-        ver, src="doc_a", dst="doc_b", distinct_pairs=True
-    )
-    sh.unpersist(blocking=False)
+    labels = minhash_components(shingle_sets(corpus))
     qual = corpus.select("doc_id", _quality_score(F.col("text")).alias("quality"))
     memb = labels.join(qual, labels["node"] == qual["doc_id"]).select(
         F.col("component").alias("cluster_id"),

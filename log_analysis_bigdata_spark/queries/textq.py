@@ -24,6 +24,7 @@ from ..catalog import load_table
 from ..functions.text import (
     MINHASH_P,
     minhash_component,
+    minhash_mix,
     minhash_mix_consts,
     shingle_hashes,
     shingles,
@@ -33,15 +34,6 @@ from ..functions.text import (
 
 
 from . import register
-
-
-def _mix(h, seed: int):
-    """Seed-th universal-hash mix of a base-hash COLUMN (scalar twin of
-    functions.text.minhash_component's per-element mix)."""
-    a, b = minhash_mix_consts(seed)
-    return (F.lit(a) * (h % F.lit(MINHASH_P)) + F.lit(b)) % F.lit(MINHASH_P)
-
-N_MINHASH = 8  # signature width; 2 bands × 4 rows
 
 
 def _tokens(col: str = "text") -> Column:
@@ -207,54 +199,27 @@ _BANDS_SQL = f"""
 )
 def minhash_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MinHash-LSH candidate pairs: shingle → 8-component signature →
-    2 bands × 4 rows → per-band equi-join, union, distinct.
+    2 bands × 4 rows → one equi-join on the (band, digest) bucket key —
+    operators/dedup.py's candidate stage, unverified.
 
-    The oracle's OR-join is expressed as a union of two equi-joins so
-    each band join stays hash-partitioned (never quadratic). The band
-    table is persisted before the self-join — at 100 TB you'd write the
-    signature table out and bucket it by band; persist is the local-mode
-    stand-in for that materialization.
+    The oracle's OR-join is the union of the per-band equi-joins, which
+    candidate_pairs expresses as a single composite-key join, so the
+    bucket join stays hash-partitioned (never quadratic). Docs with < 3
+    tokens are dropped by shingle_sets, mirroring the oracle's NULL
+    band that never equi-joins.
     """
+    from ..operators.dedup import band_digests, candidate_pairs, shingle_sets
+
     # repartition: the doc corpus is one small input split locally —
-    # spread the shingle+md5-heavy stages across all cores. persist(sh):
-    # pins the computed shingle arrays so CollapseProject can't re-inline
-    # the shingle construction into each of the 8 signature components
-    # (8× recompute), and the band self-join reads the cache instead of
-    # recomputing the whole pipeline per side.
+    # spread the shingle+md5-heavy stage across all cores. persist(sh)
+    # keeps the md5 base hash single-pass (functions.text docstring);
+    # persist(bands) lets both sides of the bucket self-join read the
+    # signature mixes once
     corpus = _dup_corpus_spark(spark, sf_dir).repartition(
         spark.sparkContext.defaultParallelism
     )
-    # docs with < 3 tokens have EMPTY hs -> all-NULL sigs; concat_ws
-    # skips NULLs, so without this filter every such doc would share
-    # band digest md5("") and all-pair as candidates — while the
-    # oracle's NULL band never equi-joins (code-review r7). Dropping
-    # them mirrors shingle_sets' policy (and the oracle's no-join).
-    sh = (
-        corpus.select(
-            "doc_id", shingle_hashes(shingles(_tokens())).alias("hs")
-        )
-        .filter(F.size("hs") > 0)
-        .persist()
-    )
-    sigs = [minhash_component(F.col("hs"), i) for i in range(N_MINHASH)]
-    bands = sh.select(
-        "doc_id",
-        F.md5(
-            F.concat_ws("|", *[c.cast("string") for c in sigs[0:4]])
-        ).alias("band0"),
-        F.md5(
-            F.concat_ws("|", *[c.cast("string") for c in sigs[4:8]])
-        ).alias("band1"),
-    ).persist()
-    pairs = None
-    for band in ("band0", "band1"):
-        a = bands.select(F.col("doc_id").alias("doc_a"), F.col(band).alias("b"))
-        b = bands.select(F.col("doc_id").alias("doc_b"), F.col(band).alias("b"))
-        p = a.join(b, "b").filter(F.col("doc_a") < F.col("doc_b")).select(
-            "doc_a", "doc_b"
-        )
-        pairs = p if pairs is None else pairs.unionByName(p)
-    return pairs.distinct()
+    sh = shingle_sets(corpus).persist()
+    return candidate_pairs(band_digests(sh).persist())
 
 
 @register(
@@ -1659,7 +1624,7 @@ def grouped_minhash_union(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sigs = sh.groupBy("lang").agg(
         *[
-            F.min(_mix(F.col("h"), i)).alias(f"sig{i}")
+            F.min(minhash_mix(F.col("h"), i)).alias(f"sig{i}")
             for i in range(4)
         ]
     )
@@ -2113,51 +2078,24 @@ def simhash_near_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     drifts k·3 bits), so the edge set for clustering is kept strict
     while pair REPORTING (simhash_near_pairs) stays at ≤ 3.
 
-    Scale (round 7): documents are COLLAPSED BY IDENTICAL SIGNATURE
-    before any pairing — hamming-0 duplicates (the bulk of a duplicated
-    corpus, and exactly the skew that makes band buckets quadratic) cost
-    one groupBy; banded candidate generation, hamming verify, and the
-    components solve then run on DISTINCT signatures only, and labels
-    re-expand to documents through the signature→rep map. This is
-    semantics-preserving, not an approximation: hamming is a function
-    of the signature pair, so every cross-group doc edge exists iff the
-    rep edge exists, and an n≥2 group is internally connected (hamming
-    0) — rendered as a rep self-loop. Measured at sf0.1: 1.9M doc pairs
-    → a few hundred rep pairs; 7.2 s → ~2 s. Banded generation stays
-    never-all-pairs; the verify runs before the pair distinct; the
-    components operator picks its local-vs-distributed path by edge
-    count (operators/components.py); max_iter raises rather than
+    Scale (round 7): the clustering runs on the identical-signature
+    quotient (operators/components.exact_class_components): hamming-0
+    duplicates — the bulk of a duplicated corpus, and exactly the skew
+    that makes band buckets quadratic — cost one exchange, and banded
+    candidate generation, hamming verify and the components solve see
+    distinct signatures only. Measured at sf0.1: 1.9M doc pairs → a few
+    hundred rep pairs; 7.2 s → ~2 s. max_iter raises rather than
     mislabeling.
     """
-    corpus = _dup_corpus_spark(spark, sf_dir)
-    sig = _near_sig_spark(corpus).localCheckpoint(eager=True)
-    groups = (
-        sig.groupBy("simhash")
-        .agg(F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    rep_pairs = _near_cand_pairs(
-        groups.select(F.col("rep").alias("doc_id"), "simhash"), max_hamming=1
-    ).select("doc_a", "doc_b")
-    # n>=2 groups are internally connected at hamming 0: a rep
-    # self-loop keeps their members in the output even when the rep has
-    # no cross-signature neighbor
-    self_loops = groups.filter(F.col("n") >= 2).select(
-        F.col("rep").alias("doc_a"), F.col("rep").alias("doc_b")
-    )
+    from ..operators.components import exact_class_components
 
-    from ..operators.components import connected_components
-
-    rep_labels = connected_components(
-        rep_pairs.unionByName(self_loops),
-        src="doc_a",
-        dst="doc_b",
-        distinct_pairs=True,
-    )
-    return (
-        sig.join(groups.select("simhash", "rep"), "simhash")
-        .join(rep_labels, F.col("rep") == F.col("node"))
-        .select(F.col("doc_id").alias("node"), F.col("component"))
+    sig = _near_sig_spark(_dup_corpus_spark(spark, sf_dir))
+    return exact_class_components(
+        sig,
+        F.col("simhash"),
+        lambda reps, n_reps: _near_cand_pairs(
+            reps, max_hamming=1, band_bits=near_band_bits(n_reps)
+        ).select("doc_a", "doc_b"),
     )
 
 

@@ -655,9 +655,10 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _banded_near_dup_pairs(emb: DataFrame, bits: int, thr: float) -> DataFrame:
     """(id_a, id_b, cosine) hyperplane-LSH near-dup pairs over
     ``emb(vec_id, embedding)`` — the banding/verify core shared by the
-    full pair listing (embedding_near_dup) and the collapsed components
-    path (_near_dup_component_edges). Ladder inputs (bits, thr) come
-    from the CALLER's corpus count so both paths band identically."""
+    full pair listing (embedding_near_dup) and the clustering over
+    exact-class representatives (dedup_components). Ladder inputs
+    (bits, thr) come from the CALLER's corpus count so both paths band
+    identically."""
     e = F.col("embedding")
 
     def band(start: int):
@@ -717,60 +718,6 @@ def _banded_near_dup_pairs(emb: DataFrame, bits: int, thr: float) -> DataFrame:
     return cand.dropDuplicates(["id_a", "id_b"]).orderBy(
         F.desc("cosine"), "id_a", "id_b"
     )
-
-
-def _near_dup_component_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(id_a, id_b) edge list that is COMPONENT-EQUIVALENT to
-    embedding_near_dup's pair list, with the minhash exact-class star
-    collapse applied (r17 — VERDICT r16 task 4): vectors grouped by a
-    fixed-width xxhash64 pair over the raw embedding array collapse to
-    one representative before banding, members contribute one star edge
-    each to the class's min vec_id. Byte-identical embeddings have
-    identical sign patterns in EVERY band — a 2,500-member identical
-    class makes the bucket join m²/2-quadratic exactly like minhash's
-    degenerate bucket (measured: see the probe's dup-class tile) — and
-    cosine(a, a) rounds to 1.0 ≥ thr, so the class is a guaranteed
-    clique whose connectivity an (m−1)-edge star reproduces. Any
-    member's near-dup edge is its rep's edge (same vector), so
-    components are unchanged; the ladder inputs (bits, thr) still come
-    from the FULL corpus count, matching the oracle's bb CTE. Digest
-    collision needs two independent 64-bit agreements (~2^-128/class
-    pair) — the accepted verify_jaccard collision class. The PAIR
-    LISTING (embedding_near_dup) keeps the uncollapsed plan: its
-    output is itself quadratic on such input, which no plan avoids
-    (the minhash_dup_pairs caveat, operators/dedup.py)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    n = emb.count()
-    bits, thr = lsh_band_bits(n), near_dup_threshold(n)
-    ek = F.col("embedding")
-    from ..session import bounded_persist
-
-    keyed = bounded_persist(
-        "vectorq._near_dup_component_edges.keyed",
-        emb.select(
-            "vec_id",
-            "embedding",
-            F.xxhash64(ek).alias("ck1"),
-            F.xxhash64(ek, F.lit(-7046029254386353131)).alias("ck2"),
-        ),
-    )
-    classes = keyed.select("ck1", "ck2", "vec_id").groupBy("ck1", "ck2").agg(
-        F.min("vec_id").alias("rep")
-    )
-    # both branches below (star edges, reps-only banding) read this
-    # join: persist it so the corpus-wide exchange runs once, not twice
-    with_rep = bounded_persist(
-        "vectorq._near_dup_component_edges.with_rep",
-        keyed.join(classes, ["ck1", "ck2"]),
-    )
-    star = with_rep.filter(F.col("vec_id") != F.col("rep")).select(
-        F.col("rep").alias("id_a"), F.col("vec_id").alias("id_b")
-    )
-    reps = with_rep.filter(F.col("vec_id") == F.col("rep")).select(
-        "vec_id", "embedding"
-    )
-    pairs = _banded_near_dup_pairs(reps, bits, thr).select("id_a", "id_b")
-    return pairs.unionByName(star)
 
 
 IVF_CELLS = 4
@@ -912,17 +859,28 @@ def dedup_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup clusters: embedding-LSH near-dup edges → connected
     components (operators.components, iterative min-label propagation);
     each component's min vec_id is the canonical keeper a dedup pipeline
-    retains. The oracle replays the fixpoint with a recursive CTE —
-    DuckDB's own iteration — over the UNCOLLAPSED pair generation; the
-    engine feeds the component-equivalent collapsed edge list
-    (_near_dup_component_edges — exact-duplicate embedding classes
-    star-collapse before banding, r17), so the oracle doubles as the
-    output-preservation proof for the collapse.
+    retains. The engine clusters the exact-class quotient
+    (operators/components.exact_class_components — byte-identical
+    embeddings share every sign band, and cosine(a, a) rounds to 1.0 ≥
+    thr), while the oracle replays the fixpoint with a recursive CTE —
+    DuckDB's own iteration — over the UNCOLLAPSED pair generation, so
+    it doubles as the output-preservation proof for the quotient. The
+    ladder inputs (bits, thr) come from the FULL corpus count, matching
+    the oracle's bb CTE.
     """
-    edges = _near_dup_component_edges(spark, sf_dir)
-    from ..operators.components import connected_components
+    from ..operators.components import exact_class_components
 
-    return connected_components(edges, src="id_a", dst="id_b")
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+    n = emb.count()
+    bits, thr = lsh_band_bits(n), near_dup_threshold(n)
+    return exact_class_components(
+        emb,
+        F.col("embedding"),
+        lambda reps, _: _banded_near_dup_pairs(reps, bits, thr).select(
+            "id_a", "id_b"
+        ),
+        id_col="vec_id",
+    )
 
 
 # The histogram oracle replays dedup_components' full recursive-CTE

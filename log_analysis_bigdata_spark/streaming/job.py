@@ -7,13 +7,15 @@ Reference pipeline (per message, kafka_consumer.py:27-40):
                       predict_proba ≥ 0.83
   insert_data_to_HBase.py:6-46  stringify + put (last-write-wins upsert)
 
-Engine rendering: one Structured Streaming query. The parse/template/
-feature transform is the SAME batch code (functions.logparse /
-functions.templates / operators.features) applied to the exploded
-``log_full`` lines — this kills Skew-1..4 by construction. Scoring is a
-column expression (or the ml.inference pandas-UDF for a real model);
-the sink is a keyed last-write-wins parquet upsert via foreachBatch
-(locally; Delta MERGE on a real deployment).
+Engine rendering: one Structured Streaming query. Per-message features
+are array higher-order functions over the ``log_full`` lines that share
+the batch layer's template tagger and message regex
+(functions.templates.event_id_expr, functions.logparse.RE_MESSAGE), so
+both layers tag a line identically. Scoring is a column expression (or
+ml.inference.model_scorer_udf for a real model) thresholded by
+ml.inference.threshold_prediction; the sink is a keyed last-write-wins
+parquet upsert via foreachBatch (locally; Delta MERGE on a real
+deployment).
 """
 
 from __future__ import annotations
@@ -24,8 +26,9 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..functions.logparse import parse_log_lines
+from ..functions.logparse import RE_MESSAGE
 from ..functions.templates import event_id_expr
+from ..ml.inference import threshold_prediction
 from ..schemas import SESSION_MESSAGE
 
 
@@ -36,18 +39,6 @@ def decode_messages(raw: DataFrame, value_col: str = "value") -> DataFrame:
     return raw.select(
         F.from_json(F.col(value_col).cast("string"), SESSION_MESSAGE).alias("m")
     ).select("m.*")
-
-
-def parse_message_lines(messages: DataFrame) -> DataFrame:
-    """Explode each session message's log_full into parsed lines —
-    the shared batch parser over the stream (Skew-3 fixed: the parser
-    accepts both timestamp formats), carrying the message key through."""
-    lines = messages.select(
-        F.col("block_id").alias("message_block_id"),
-        "start_ts",
-        F.explode(F.split("log_full", "\n")).alias("value"),
-    )
-    return parse_log_lines(lines, "value")
 
 
 def dedup_messages(
@@ -103,8 +94,6 @@ def message_features(
     of accumulating (the reference's HBase-put semantics), and the
     stream stage stays a narrow map at any scale.
     """
-    from ..functions.logparse import RE_MESSAGE
-
     eids = F.transform(
         F.split("log_full", "\n"),
         lambda v: event_id_expr(
@@ -124,7 +113,7 @@ def message_features(
 def score_expr(event_ids: Sequence[str], weights: dict[str, float], bias: float):
     """Linear + sigmoid scoring as a pure column expression — the
     cheapest correct rendering of M9 when the model is linear; for
-    tree models use ml.inference.pandas_udf_scorer."""
+    tree models use ml.inference.model_scorer_udf."""
     z = F.lit(bias)
     for e in event_ids:
         w = weights.get(e, 0.0)
@@ -251,10 +240,10 @@ def run_file_stream(
         content_cols=["_payload_md5"],
     ).drop("_payload_md5")
     feats = message_features(msgs, templates, event_ids)
-    scored = feats.withColumn(
-        "score", score_expr(event_ids, weights or {}, bias)
-    ).withColumn("prediction", (F.col("score") >= 0.83).cast("int")).withColumn(
-        "ts_ms", F.unix_millis(F.current_timestamp())
+    scored = (
+        feats.withColumn("score", score_expr(event_ids, weights or {}, bias))
+        .withColumn("prediction", threshold_prediction(F.col("score")))
+        .withColumn("ts_ms", F.unix_millis(F.current_timestamp()))
     )
     # availableNow (default) = the batch-replay harness; pass
     # {"processingTime": "1 second"} for the reference demo's

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from log_analysis_bigdata_spark.catalog import load_table
@@ -176,6 +177,64 @@ def test_connected_components_chain_and_islands(spark):
         for r in connected_components(edges).collect()
     }
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20}
+
+
+@pytest.mark.parametrize("array_key", [False, True])
+def test_exact_class_components_equals_member_level_clustering(
+    spark, array_key
+):
+    """The exact-class quotient against connected_components over the
+    UNCOLLAPSED member edges (edge predicate |sig_a - sig_b| <= 1, which
+    holds between identical payloads), for both key kinds: an integral
+    key used as is and an array key digested to the xxhash64 pair.
+    Cases: an all-duplicate class with no neighbour is present and
+    labelled with its min id; an edgeless singleton is absent; two
+    classes joined by one representative edge are one component."""
+    from log_analysis_bigdata_spark.operators.components import (
+        connected_components,
+        exact_class_components,
+    )
+
+    rows = [
+        (9, 100), (5, 100), (7, 100),  # all-duplicate class, no neighbour
+        (3, 500),                      # edgeless singleton
+        (12, 200), (10, 200),          # class B ...
+        (14, 201), (11, 201),          # ... one rep edge to class C
+        (20, 203), (21, 204),          # singletons joined by an edge
+    ]
+    members = spark.createDataFrame(rows, ["doc_id", "sig"])
+
+    def near(df):
+        a = df.select(F.col("doc_id").alias("a"), F.col("sig").alias("sa"))
+        b = df.select(F.col("doc_id").alias("b"), F.col("sig").alias("sb"))
+        close = F.abs(F.col("sa") - F.col("sb")) <= 1
+        return a.join(b, close & (F.col("a") < F.col("b"))).select("a", "b")
+
+    reps_seen, counts = [], []
+
+    def rep_edges(reps, n_reps):
+        reps_seen.extend(r["doc_id"] for r in reps.collect())
+        counts.append(n_reps)
+        return near(reps)
+
+    key = F.array("sig") if array_key else F.col("sig")
+    got = {
+        r["node"]: r["component"]
+        for r in exact_class_components(members, key, rep_edges).collect()
+    }
+    want = {
+        r["node"]: r["component"]
+        for r in connected_components(near(members), "a", "b").collect()
+    }
+    assert got == want
+    assert got == {
+        5: 5, 7: 5, 9: 5,
+        10: 10, 11: 10, 12: 10, 14: 10,
+        20: 20, 21: 20,
+    }
+    # one representative per class reached edge derivation
+    assert sorted(reps_seen) == [3, 5, 10, 11, 20, 21]
+    assert counts == [6]
 
 
 def test_observed_ingest_health_batch(spark):
@@ -603,8 +662,6 @@ def test_rebase_base_dir_guards_non_local_master():
     correct when driver == executors. A non-local master without a
     checkpoint dir must raise with actionable guidance, never silently
     write executor-local part files."""
-    import pytest
-
     from log_analysis_bigdata_spark.operators import components as C
 
     class _Ctx:
@@ -698,7 +755,7 @@ def test_bounded_broadcast_keeps_one_live_block_per_site(spark):
     del las_session._LIVE_RESOURCES[site]
 
 
-def test_setequal_class_collapse_rotated_boilerplate(spark):
+def test_setequal_class_collapse_rotated_boilerplate(spark, monkeypatch):
     """ADVICE r16 + VERDICT r17 task 5: the exact-class collapse keys
     on SHINGLE-SET equality via a fixed-width digest pair, not the raw
     hs array. Rotated boilerplate (token rotations of one cycle) has
@@ -709,12 +766,7 @@ def test_setequal_class_collapse_rotated_boilerplate(spark):
     representative enters candidate generation; (2) the pipeline
     output is the single cluster with min-id keeper the brute-force
     semantics require."""
-    from log_analysis_bigdata_spark.operators.dedup import (
-        band_digests,
-        candidate_pairs,
-        minhash_dedup_pipeline,
-        shingle_sets,
-    )
+    from log_analysis_bigdata_spark.operators import dedup
 
     base = ["tok%02d" % i for i in range(12)]
     m = 24
@@ -728,31 +780,23 @@ def test_setequal_class_collapse_rotated_boilerplate(spark):
     ] + [(999, "entirely different text with no overlap at all here")]
     corpus = spark.createDataFrame(rows, ["doc_id", "text"])
 
-    sd = F.array_sort(F.array_distinct("hs"))
-    keyed = shingle_sets(corpus).select(
-        "doc_id",
-        "hs",
-        F.xxhash64(sd).alias("ck1"),
-        F.xxhash64(sd, F.lit(-7046029254386353131)).alias("ck2"),
-    )
-    classes = (
-        keyed.groupBy("ck1", "ck2")
-        .agg(F.min("doc_id").alias("rep"), F.count(F.lit(1)).alias("n"))
-        .collect()
-    )
-    sizes = sorted(c["n"] for c in classes)
-    assert sizes == [1, m], sizes  # one m-member class + the outlier
-    # only the representative reaches banding: candidate volume is
-    # O(1), not m^2/2 = 276
-    reps = keyed.join(
-        keyed.groupBy("ck1", "ck2").agg(F.min("doc_id").alias("doc_id")),
-        ["ck1", "ck2", "doc_id"],
-    ).select("doc_id", "hs")
-    assert candidate_pairs(band_digests(reps)).count() == 0
+    banded = []
+    orig = dedup.band_digests
 
+    def spy(sh):
+        banded.append(sh)
+        return orig(sh)
+
+    monkeypatch.setattr(dedup, "band_digests", spy)
     out = {
         r["keep_doc_id"]: (r["n_members"], r["max_doc_id"])
-        for r in minhash_dedup_pipeline(corpus).collect()
+        for r in dedup.minhash_dedup_pipeline(corpus).collect()
     }
+    monkeypatch.setattr(dedup, "band_digests", orig)
+    # one m-member class + the outlier: only the class representative
+    # reaches banding, so candidate volume is O(1), not m^2/2 = 276
+    (reps,) = banded
+    assert sorted(r["doc_id"] for r in reps.collect()) == [100, 999]
+    assert dedup.candidate_pairs(orig(reps)).count() == 0
     assert out[100] == (m, 100 + m - 1)
     assert 999 not in out  # singleton never verified: no cluster row

@@ -271,37 +271,42 @@ def test_heavy_hitters_sketch_arm_counts_null_keys(spark, monkeypatch):
     assert len(null_rows) == 1 and null_rows[0]["n"] == 5_000
 
 
-def test_embedding_dup_class_collapse_component_equivalent(spark, tmp_path):
+def test_embedding_dup_class_collapse_component_equivalent(
+    spark, tmp_path, monkeypatch
+):
     """r17 (VERDICT r16 task 4): byte-identical embeddings form a
     degenerate hyperplane-LSH bucket (every sign band agrees), so
-    dedup_components routes through _near_dup_component_edges — exact
-    classes star-collapse to their min vec_id before banding. Pins:
-    (1) components are IDENTICAL to the uncollapsed pair generation's
-    (the output-preservation proof at unit scale); (2) the class
-    contributes exactly m star edges, and the banded join sees one
-    representative (candidate volume O(naturals), never m²/2)."""
+    dedup_components clusters the exact-class quotient
+    (operators/components.exact_class_components). Pins: (1) components
+    are IDENTICAL to the uncollapsed pair generation's (the
+    output-preservation proof at unit scale); (2) the banded join sees
+    ONE representative of the m-member class (candidate volume
+    O(naturals), never m²/2)."""
     from tools.skew_fixture import make_dup_class_embeddings
 
     from log_analysis_bigdata_spark.operators.components import (
         connected_components,
     )
-    from log_analysis_bigdata_spark.queries.vectorq import (
-        _near_dup_component_edges,
-        embedding_near_dup,
-    )
+    from log_analysis_bigdata_spark.queries import vectorq
 
     d = str(tmp_path)
     meta = make_dup_class_embeddings(d, n_natural=200, m_dup=40)
     n_nat, m = meta["n_natural"], meta["m_dup"]
 
-    edges = _near_dup_component_edges(spark, d)
+    banded_ids = []
+    orig = vectorq._banded_near_dup_pairs
+
+    def spy(emb, bits, thr):
+        banded_ids.extend(r["vec_id"] for r in emb.select("vec_id").collect())
+        return orig(emb, bits, thr)
+
+    monkeypatch.setattr(vectorq, "_banded_near_dup_pairs", spy)
     got = {
         r["node"]: r["component"]
-        for r in connected_components(
-            edges, src="id_a", dst="id_b"
-        ).collect()
+        for r in vectorq.dedup_components(spark, d).collect()
     }
-    pairs = embedding_near_dup(spark, d).select("id_a", "id_b")
+    monkeypatch.setattr(vectorq, "_banded_near_dup_pairs", orig)
+    pairs = vectorq.embedding_near_dup(spark, d).select("id_a", "id_b")
     want = {
         r["node"]: r["component"]
         for r in connected_components(
@@ -312,18 +317,10 @@ def test_embedding_dup_class_collapse_component_equivalent(spark, tmp_path):
     # the planted ids all collapse to vector 0's component
     for i in range(n_nat, n_nat + m):
         assert got[i] == 0
-    # star contribution: the class's members appear exactly once as a
-    # star target each in the collapsed edge list (id_a == 0 for them),
-    # and the banded join carried ONE representative — so collapsed
-    # edges among class ids are exactly the m star edges, while the
-    # uncollapsed pair list is quadratic in the class
+    # candidate generation carried ONE representative of the class,
+    # while the uncollapsed pair list is quadratic in the class
     class_ids = set(range(n_nat, n_nat + m)) | {0}
-    star_edges = [
-        r
-        for r in edges.collect()
-        if r["id_a"] in class_ids and r["id_b"] in class_ids
-    ]
-    assert len(star_edges) == m
+    assert sorted(banded_ids) == list(range(n_nat))
     quad = pairs.filter(
         F.col("id_a").isin(list(class_ids))
         & F.col("id_b").isin(list(class_ids))

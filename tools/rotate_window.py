@@ -142,7 +142,6 @@ ARTIFACTS_OF_RECORD = (
     "BENCH_LOCAL.json",
     "BENCH_SF10_LOCAL.json",
     "BENCH_SF1_LOCAL.json",
-    "AB_DRIFT_r*.json",
 )
 
 
