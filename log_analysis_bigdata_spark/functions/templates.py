@@ -17,9 +17,18 @@ Engine decision (documented in SURVEY §2.9): ONE semantic —
 plan shape in Spark: one coalesced expression instead of 29 stacked
 projections (the reference's plan-authoring hazard, SURVEY §4).
 
-Template → regex compilation follows ``prepare_data_batch.ipynb:282-286``:
-``re.escape`` the literal text, then turn escaped ``[*]`` into ``.*``,
-matched unanchored against the message (batch semantic, Skew-2 decision).
+Template → regex compilation keeps the matching semantics of
+``prepare_data_batch.ipynb:282-286`` (``re.escape`` the literal text, every
+``[*]`` a ``.*``, matched unanchored — batch semantic, Skew-2 decision) but
+not its pattern text: the template is split on ``[*]``, each literal
+segment is escaped, the segments are joined with ``.*``, and empty
+segments are dropped, so no pattern starts or ends with ``.*``. That is
+exact for an unanchored search (``rlike`` is ``Matcher.find()``): ``.*``
+matches the empty string, so ``.*X`` finds a match iff ``X`` does, ``X.*``
+iff ``X`` does, and ``.*.*`` matches what ``.*`` matches. The edge
+wildcards are dropped for cost: with a leading ``.*`` a failed ``find()``
+re-runs a greedy scan from every start offset, O(len²) per template, and
+a line fails about half of the chain before a template matches.
 """
 
 from __future__ import annotations
@@ -32,9 +41,17 @@ from pyspark.sql import functions as F
 
 
 def compile_template_regex(template: str) -> str:
-    """``[*]`` wildcard template → unanchored regex string."""
-    escaped = re.escape(template)
-    return escaped.replace(re.escape("[*]"), ".*")
+    """``[*]`` wildcard template → regex for an unanchored search.
+
+    ``[*]Served block[*]to[*]`` → ``Served\\ block.*to``: the escaped
+    literal segments joined by ``.*``, empty segments (edge and repeated
+    wildcards) dropped. It finds a match in exactly the strings the
+    ``.*``-for-every-``[*]`` pattern does (module docstring), without the
+    leading ``.*`` that makes a failed search quadratic in the line
+    length. An all-wildcard template compiles to ``""``, which matches
+    every non-null string, as ``.*`` does.
+    """
+    return ".*".join(re.escape(seg) for seg in template.split("[*]") if seg)
 
 
 def event_id_expr(

@@ -79,11 +79,12 @@ def balanced_class_weights(
     """Attach `weight = N / (K * n_class)` to every row (`nb:597-607`).
 
     The per-class count table is K rows — broadcast so the join back is
-    map-side at any scale.
+    map-side at any scale. N and K come from one collect of that table:
+    each action re-runs the whole uncached train plan.
     """
     cnt = train.groupBy(label_col).agg(F.count(F.lit(1)).alias("n"))
-    n_total = cnt.agg(F.sum("n")).first()[0]
-    k = cnt.count()
+    ns = [r["n"] for r in cnt.collect()]
+    n_total, k = sum(ns), len(ns)
     weights = cnt.select(
         label_col, (F.lit(float(n_total)) / (F.lit(k) * F.col("n"))).alias(weight_col)
     )

@@ -53,7 +53,8 @@ def main() -> None:
             df = registry[name].spark(spark, args.sf_dir)
             df.write.format("noop").mode("overwrite").save()
             wall = time.perf_counter() - t0
-            sc.setJobGroup(None, None)
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
             jids = sc.statusTracker().getJobIdsForGroup(group)
             runs.append({"jobs": len(jids), "wall": round(wall, 3)})
         out[name] = runs
